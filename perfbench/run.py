@@ -162,6 +162,7 @@ def main():
            "-cp", cp, "perfbench.Main",
            "--workload", a.workload, "--seed", str(a.seed), "--seconds", str(a.seconds),
            "--trace", str(a.trace), "--cpus", str(a.cpus),
+           "--spec", os.path.join(ROOT, "BENCHMARK.json"), "--bench", BENCH,
            "--work", os.path.join(work, "data"), "--out", artifact]
     load_start = os.getloadavg()
     try:

@@ -53,12 +53,13 @@ object Inputs {
   */
 final class Pipeline(spark: SparkSession, root: Path) {
   val in: Path = Files.createDirectories(root.resolve("in"))
+  val checkpoint: Path = root.resolve("checkpoint")
   val bronze = new EvolvingTableSink(root.resolve("bronze").toString)
   val dead = new ParquetAppendSink(root.resolve("dead_letters").toString)
 
   def start(trigger: Trigger): StreamingQuery =
     new StreamProcessor(bronze, dead,
-      checkpointLocation = root.resolve("checkpoint").toString, trigger = trigger)
+      checkpointLocation = checkpoint.toString, trigger = trigger)
       .start(Sources.textDirStream(spark, in.toString))
 
   /** Rename a staged file into the watched directory: the source never
@@ -118,25 +119,40 @@ final class Expected(val truth: Seq[FileTruth]) {
 
 /** The bronze state an ingest left, reconciled against ground truth. */
 final class Audit(spark: SparkSession, p: Pipeline, val expected: Expected, acct: Accounting) {
-  private val rows = p.bronze.read(spark).select("event_id", "_batch_id").collect()
-  val idCounts: Map[String, Long] =
-    rows.groupBy(_.getString(0)).map { case (k, v) => k -> v.length.toLong }
-  private val batchOfId: Map[String, Long] = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
+  val idCounts: Map[String, Long] = p.bronze.read(spark).select("event_id").collect()
+    .groupBy(_.getString(0)).map { case (k, v) => k -> v.length.toLong }
   val deadCounts: Map[String, Long] = Reads.counts(p.deadLetters.groupBy("_dead_letter_reason").count())
 
   acct.record(Reconcile.operations(expected.truth, deadCounts),
     Reconcile.bronze(expected.truth, idCounts) ++ Reconcile.deadLetters(expected.truth, deadCounts))
+}
 
-  /** The micro-batch that committed each file's valid rows (the last one,
-    * should a defect have split them).
-    */
-  val batchOfFile: Map[String, Long] = expected.truth.flatMap { f =>
-    f.valid.flatMap(e => batchOfId.get(e.id)).maxOption.map(f.name -> _)
-  }.toMap
+/** The micro-batch Spark's file source assigned each landed file to, read
+  * from the checkpoint's source log: Spark's own metadata, written before
+  * the batch runs, so it says which files a micro-batch committed
+  * without asking the program's sinks. Each log file holds a version
+  * line and one JSON entry per file; a compacted one holds every entry
+  * up to its batch.
+  */
+final case class SourceLog(batchOf: Map[String, Long])
 
-  /** Valid rows of the files committed by the given micro-batches. */
-  def rowsIn(batchIds: Set[Long]): Long =
-    expected.truth.filter(f => batchOfFile.get(f.name).exists(batchIds)).map(_.valid.size.toLong).sum
+object SourceLog {
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+  /** `<batch>` or `<batch>.compact`; checksum files start with a dot. */
+  private val LogFile = """\d+(\.compact)?""".r
+
+  def read(checkpoint: Path): SourceLog = {
+    val files = Files.list(checkpoint.resolve("sources").resolve("0"))
+    val entries = try files.iterator.asScala.toList.filter(f => Files.isRegularFile(f) &&
+        LogFile.matches(f.getFileName.toString))
+      .flatMap(f => Files.readAllLines(f, UTF_8).asScala.drop(1).filter(_.nonEmpty))
+    finally files.close()
+    SourceLog(entries.map { line =>
+      val e = mapper.readTree(line)
+      val path = e.get("path").asText
+      path.substring(path.lastIndexOf('/') + 1) -> e.get("batchId").asLong
+    }.toMap)
+  }
 }
 
 /** The reference's DuckDB demo reads, run through the engine's readers,

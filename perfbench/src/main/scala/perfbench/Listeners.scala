@@ -44,6 +44,7 @@ final class BatchLog extends StreamingQueryListener {
 final class JobRecord(val jobId: Int, val startMs: Long, val span: String,
     val batchId: Option[Long], val writeTarget: Option[String]) {
   var endMs: Long = startMs
+  var stages = 0
   var tasks = 0
   var cpuNs = 0L
   var gcMs = 0L
@@ -51,6 +52,8 @@ final class JobRecord(val jobId: Int, val startMs: Long, val span: String,
   var spillBytes = 0L
   var inputBytes = 0L
   var outputBytes = 0L
+  /** Largest peak execution memory of any one task. */
+  var peakExecMem = 0L
   def ms: Long = endMs - startMs
 }
 
@@ -92,7 +95,12 @@ final class JobLog extends SparkListener {
       j.spillBytes += m.memoryBytesSpilled + m.diskBytesSpilled
       j.inputBytes += m.inputMetrics.bytesRead
       j.outputBytes += m.outputMetrics.bytesWritten
+      j.peakExecMem = math.max(j.peakExecMem, m.peakExecutionMemory)
     }
+  }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit = synchronized {
+    stageJob.get(e.stageInfo.stageId).flatMap(jobs.get).foreach(_.stages += 1)
   }
 
   override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {

@@ -1,75 +1,34 @@
 package perfbench
 
-import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
+
+import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 import graft.engine.Sessions
 
 /** One benchmark run in its own JVM:
   *
   *   perfbench.Main --workload <ingest_trickle|ingest_catchup> --seed <n>
-  *     --seconds <s> --trace <0|1> --cpus <n> --work <dir> --out <file>
+  *     --seconds <s> --trace <0|1> --cpus <n> --spec <BENCHMARK.json>
+  *     --bench <perfbench dir> --work <dir> --out <file>
   *
   * Writes the run's artifact (result line, every metric with its unit,
-  * spans, failures) to `--out`. Exit code 0 on a valid run, 3 when the
-  * run is not valid for timing, 1 when it could not complete.
+  * spans, failures) to `--out`. The metrics reported, and their units, are
+  * the ones `--spec` declares. Exit code 0 on a valid run, 3 when the run
+  * is not valid for timing, 1 when it could not complete.
   */
 object Main {
 
-  val EndToEnd: Seq[(String, String)] = Seq(
-    "setup_s" -> "s",
-    "freshness_ms_p50" -> "ms",
-    "freshness_ms_p95" -> "ms",
-    "ingest_events_per_s" -> "events/s",
-    "bronze_query_ms" -> "ms",
-    "maintenance_s" -> "s",
-    "bronze_files" -> "count",
-    "bronze_mb" -> "MB",
-    "retained_heap_mb" -> "MB")
+  val mapper: ObjectMapper = new ObjectMapper().registerModule(DefaultScalaModule)
 
-  val PerLayer: Seq[(String, String)] = Seq(
-    "setup.session_s" -> "s",
-    "setup.generate_s" -> "s",
-    "setup.warm_s" -> "s",
-    "loadgen.files" -> "count",
-    "loadgen.lag_ms_max" -> "ms",
-    "freshness.samples" -> "count",
-    "freshness.highest_pct" -> "pct",
-    "sources.latest_offset_ms_p50" -> "ms",
-    "sources.get_batch_ms_p50" -> "ms",
-    "sources.backlog_files_max" -> "count",
-    "stream.trigger_ms_p50" -> "ms",
-    "stream.planning_ms_p50" -> "ms",
-    "stream.wal_commit_ms_p50" -> "ms",
-    "stream.commit_offsets_ms_p50" -> "ms",
-    "stream.route_batch_ms_p50" -> "ms",
-    "stream.jobs_per_batch" -> "count",
-    "stream.batches" -> "count",
-    "stream.rows_per_batch_p50" -> "count",
-    "ingest.parse_route_ms" -> "ms",
-    "ingest.cpu_ms" -> "ms",
-    "ingest.valid_ratio" -> "fraction",
-    "sinks.dead_letter_write_ms_p50" -> "ms",
-    "sinks.bronze_write_ms_p50" -> "ms",
-    "sinks.ledger_ms_p50" -> "ms",
-    "sinks.bronze_commit_ms_p50" -> "ms",
-    "sinks.files_written" -> "count",
-    "sinks.bytes_written" -> "bytes",
-    "sinks.read_ms" -> "ms",
-    "sinks.read_files" -> "count",
-    "sinks.read_input_bytes" -> "bytes",
-    "sinks.read_post_ms" -> "ms",
-    "sinks.read_post_files" -> "count",
-    "sinks.compact_ms" -> "ms",
-    "sinks.expire_ms" -> "ms",
-    "sinks.compact_bytes_rewritten" -> "bytes",
-    "spark.jobs" -> "count",
-    "spark.tasks" -> "count",
-    "spark.cpu_ms" -> "ms",
-    "spark.gc_ms" -> "ms",
-    "spark.shuffle_bytes" -> "bytes",
-    "spark.spill_bytes" -> "bytes",
-    "spark.shuffle_bytes_before_commit" -> "bytes")
+  /** (name, unit) of each metric a list of the spec declares, in order. */
+  def declared(spec: Path, list: String): Seq[(String, String)] =
+    mapper.readTree(spec.toFile).get(list).elements().asScala
+      .map(m => m.get("name").asText -> m.get("unit").asText).toList
 
   def main(args: Array[String]): Unit = {
     val opt = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
@@ -78,8 +37,12 @@ object Main {
     val seconds = opt("seconds").toInt
     val trace = opt("trace") == "1"
     val cpus = opt("cpus").toInt
+    val spec = Paths.get(opt("spec"))
+    val queryData = QueryData.under(Paths.get(opt("bench")))
     val work = Files.createDirectories(Paths.get(opt("work")))
     val out = Paths.get(opt("out"))
+    val endToEnd = declared(spec, "end_to_end")
+    val perLayer = declared(spec, "per_layer")
 
     val t0 = System.nanoTime()
     val spark = Sessions.local(cpus, "perfbench")
@@ -87,8 +50,8 @@ object Main {
     val tracer = new Tracer(spark, trace)
     val acct = new Accounting
     val w = workload match {
-      case "ingest_trickle" => new Trickle(spark, seed, seconds, work, tracer, acct)
-      case "ingest_catchup" => new Catchup(spark, seed, seconds, work, tracer, acct)
+      case "ingest_trickle" => new Trickle(spark, seed, seconds, work, tracer, acct, queryData)
+      case "ingest_catchup" => new Catchup(spark, seed, seconds, work, tracer, acct, queryData)
       case other => sys.error(s"unknown workload $other")
     }
     val error =
@@ -96,17 +59,18 @@ object Main {
       catch { case e: Exception => Some(s"${e.getClass.getName}: ${e.getMessage}") }
     spark.stop()
 
-    val reported = if (trace) PerLayer else EndToEnd
+    val reported = if (trace) perLayer else endToEnd
     val values = if (trace) w.perLayer else w.endToEnd
     val missing = reported.map(_._1).filterNot(values.contains)
     def withUnits(ms: Seq[(String, String)], vs: collection.Map[String, Double]) =
-      ms.filter(m => vs.contains(m._1)).map { case (k, u) => k -> Map("value" -> vs(k), "unit" -> u) }
-    val result = scala.collection.immutable.ListMap(
+      ListMap(ms.filter(m => vs.contains(m._1)).map { case (k, u) =>
+        k -> ListMap("value" -> vs(k), "unit" -> u) }: _*)
+    val result = ListMap(
       "correct" -> (acct.failed == 0 && error.isEmpty && missing.isEmpty),
       "attempted" -> math.max(1L, acct.attempted + (if (error.isDefined) 1 else 0)),
       "failed" -> (acct.failed + (if (error.isDefined) 1 else 0)),
-      "metrics" -> scala.collection.immutable.ListMap(withUnits(reported, values): _*))
-    val artifact = scala.collection.immutable.ListMap(
+      "metrics" -> withUnits(reported, values))
+    val artifact = ListMap(
       "workload" -> workload, "seed" -> seed, "seconds" -> seconds, "trace" -> trace,
       "cpus" -> cpus, "heap_max_mb" -> Runtime.getRuntime.maxMemory / 1048576,
       "result" -> result,
@@ -115,15 +79,17 @@ object Main {
       "missing_metrics" -> missing,
       "invalid" -> w.invalid.toList,
       "failures" -> acct.failureLog.take(100),
-      "end_to_end" -> scala.collection.immutable.ListMap(withUnits(EndToEnd, w.endToEnd): _*),
-      "per_layer" -> scala.collection.immutable.ListMap(withUnits(PerLayer, w.perLayer): _*),
+      "end_to_end" -> withUnits(endToEnd, w.endToEnd),
+      "per_layer" -> withUnits(perLayer, w.perLayer),
+      "query_totals" -> ListMap(w.queryTotals: _*),
       "samples" -> w.samples,
-      "jobs" -> tracer.jobs.map(_.all.map(j => scala.collection.immutable.ListMap(
+      "jobs" -> tracer.jobs.map(_.all.map(j => ListMap(
         "id" -> j.jobId, "span" -> j.span, "batch" -> j.batchId, "ms" -> j.ms,
-        "writes" -> j.writeTarget, "tasks" -> j.tasks, "cpu_ms" -> j.cpuNs / 1e6))),
-      "spans" -> tracer.allSpans.map(s => Map("name" -> s.name, "parent" -> s.parent,
+        "writes" -> j.writeTarget, "stages" -> j.stages, "tasks" -> j.tasks,
+        "cpu_ms" -> j.cpuNs / 1e6))),
+      "spans" -> tracer.allSpans.map(s => ListMap("name" -> s.name, "parent" -> s.parent,
         "start_ms" -> (s.startNs - t0) / 1e6, "ms" -> s.ms)))
-    Files.write(out, Json.render(artifact).getBytes(UTF_8))
+    mapper.writeValue(out.toFile, artifact)
     sys.exit(if (error.isDefined) 1 else if (w.invalid.nonEmpty) 3 else 0)
   }
 }

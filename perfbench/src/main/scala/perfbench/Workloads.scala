@@ -11,18 +11,20 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.engine.ingest.{EventSchema, JsonArrayBatchParser, Router}
 import graft.engine.sources.Sources
 
-/** A file as it reached the watched directory. */
-final case class Landed(file: GenFile, dueMs: Long, landMs: Long)
+/** A file as it reached the watched directory, under `landedName`. */
+final case class Landed(file: GenFile, landedName: String, dueMs: Long, landMs: Long)
 
 /** One streaming query run over the pipeline's checkpoint. */
 final case class Round(startMs: Long, files: Seq[Landed])
 
 /** The shared shape of both ingest workloads: set up, ingest (the
-  * measured phase), then audit, read, restart, maintain and read again.
-  * Subclasses decide only how files arrive and how the query is driven.
+  * measured phase), then audit, read, restart, maintain, read again and
+  * run the workload's share of the declared queries. Subclasses decide
+  * how files arrive, how the streaming query is driven and which
+  * queries they run.
   */
 abstract class IngestWorkload(spark: SparkSession, seed: Long, seconds: Int, work: Path,
-    tracer: Tracer, acct: Accounting) {
+    tracer: Tracer, acct: Accounting, queryData: QueryData) {
 
   val endToEnd = mutable.LinkedHashMap.empty[String, Double]
   val perLayer = mutable.LinkedHashMap.empty[String, Double]
@@ -37,36 +39,53 @@ abstract class IngestWorkload(spark: SparkSession, seed: Long, seconds: Int, wor
   protected def eventsPerFile: Int
   /** Files per set-up pass, landed as two micro-batches. */
   protected def warmFiles: Int
-  /** Maintenance repetitions; `maintenance_s` is their median, leaving
-    * out the first of several.
-    */
-  protected def maintenanceReps: Int
   /** Land the staged inputs and drive the pipeline until all are routed. */
   protected def ingest(p: Pipeline): Seq[Round]
   /** Reject the run for timing when the load it saw was not the load asked. */
-  protected def validate(rounds: Seq[Round], batches: Seq[BatchRecord], audit: Audit): Unit = ()
+  protected def validate(rounds: Seq[Round], batches: Seq[BatchRecord], source: SourceLog): Unit = ()
+  /** The declared queries this workload runs in its query phase. */
+  protected def queryNames: Seq[String]
 
-  /** Set-up repetitions. The first pass also takes class loading, code
-    * generation and JIT compilation off the timed phases; without the
-    * other two, micro-batches still ran up to twice as slow during the
-    * measured phase. Set-up reports the median pass.
+  /** Set-up repetitions of the ingest path, after the checked query pass
+    * took the JVM's first-job cost. The first also takes the ingest
+    * path's class loading, code generation and JIT compilation off the
+    * timed phases. Set-up reports their median.
     */
-  val WarmReps = 3
+  val WarmReps = 2
   /** Timed read-mix repetitions per read phase; the reported time is their median. */
-  val ReadReps = 3
+  val ReadReps = 2
+  /** Timed passes over the workload's queries; each query reports its
+    * faster pass, so one pass slowed by the machine does not move it.
+    */
+  val QueryReps = 2
+  /** Maintenance repetitions; `maintenance_s` is the median of all but the
+    * first, which warms the compaction path. One pass over the trickle
+    * table takes under a second, too short to time once; one over the
+    * catch-up table, about two, spread 0.30 (IQR / median) over ten seeds.
+    */
+  val MaintenanceReps = 3
+
+  private val queries = new QueryPhase(spark, queryData, queryNames, tracer, acct)
 
   def run(sessionS: Double): Unit = {
     val genT0 = System.nanoTime()
     prepare(work.resolve("staged"))
     val genS = (System.nanoTime() - genT0) / 1e9
+    // the checked query pass is the queries' warm pass: their first run
+    // pays code generation and JIT, and it runs first so the ingest warm
+    // passes start from a JVM the queries already warmed
+    val checkT0 = System.nanoTime()
+    tracer.span("warm.queries")(queries.check())
+    val checkS = (System.nanoTime() - checkT0) / 1e9
     val warmS = (1 to WarmReps).map { k =>
       val t0 = System.nanoTime()
       tracer.span("warm")(warm(k))
       (System.nanoTime() - t0) / 1e9
     }
-    endToEnd("setup_s") = sessionS + genS + Stats.median(warmS)
+    endToEnd("setup_s") = sessionS + genS + checkS + Stats.median(warmS)
     perLayer("setup.session_s") = sessionS
     perLayer("setup.generate_s") = genS
+    perLayer("setup.query_check_s") = checkS
     perLayer("setup.warm_s") = Stats.median(warmS)
     samples("warm_s") = warmS
 
@@ -79,24 +98,24 @@ abstract class IngestWorkload(spark: SparkSession, seed: Long, seconds: Int, wor
     val expected = new Expected(rounds.flatMap(_.files.map(_.file.truth)))
     val audit = new Audit(spark, p, expected, acct)
     val batches = tracer.batches.batches(queryId).filter(_.inputRows > 0)
+    val source = SourceLog.read(p.checkpoint)
     val endOf = batches.map(b => b.batchId -> b.endMs).toMap
+    def committedAt(l: Landed) = source.batchOf.get(l.landedName).flatMap(endOf.get)
 
     // freshness: due time to the end of the micro-batch that committed
     // the file's rows, over every file with at least one valid row
-    val fresh = rounds.flatMap(_.files).flatMap { l =>
-      audit.batchOfFile.get(l.file.name).flatMap(endOf.get).map(end => (end - l.dueMs).toDouble)
+    val fresh = rounds.flatMap(_.files).filter(_.file.truth.valid.nonEmpty).flatMap { l =>
+      committedAt(l).map(end => (end - l.dueMs).toDouble)
     }
     require(fresh.nonEmpty, "no file committed a valid row")
     endToEnd("freshness_ms_p50") = Stats.percentile(fresh, 50)
     endToEnd("freshness_ms_p95") = Stats.percentile(fresh, 95)
     perLayer("freshness.samples") = fresh.size
     perLayer("freshness.highest_pct") = Stats.highestSupported(fresh.size).getOrElse(0.0)
-    if (Stats.beyond(fresh.size, 95) < Stats.MinBeyond)
-      invalid += s"only ${Stats.beyond(fresh.size, 95)} freshness samples beyond p95"
 
     // events routed per wall second, query start to last commit, per round
     val perRound = rounds.map { r =>
-      val ends = r.files.flatMap(l => audit.batchOfFile.get(l.file.name).flatMap(endOf.get))
+      val ends = r.files.flatMap(committedAt)
       r.files.map(_.file.truth.events).sum * 1000.0 / (ends.max - r.startMs)
     }
     endToEnd("ingest_events_per_s") = Stats.median(perRound)
@@ -107,10 +126,15 @@ abstract class IngestWorkload(spark: SparkSession, seed: Long, seconds: Int, wor
     endToEnd("bronze_files") = bFiles
     endToEnd("bronze_mb") = bBytes / 1048576.0
     filesWritten = p.writtenFiles
-    validate(rounds, batches, audit)
+    validate(rounds, batches, source)
 
-    val mid = { val s = p.bronze.snapshotSeqs; s(s.size / 2) }
-    val midRows = audit.rowsIn(p.bronze.visibleIdsAsOf(mid).toSet)
+    // the as-of read asks for the snapshot the middle micro-batch
+    // committed; the rows it must hold come from ground truth of the
+    // files Spark's file source assigned to that batch or an earlier one
+    val (mid, midBatch) = { val s = p.bronze.snapshots; s(s.size / 2) }
+    val midRows = rounds.flatMap(_.files)
+      .filter(l => source.batchOf.get(l.landedName).exists(_ <= midBatch))
+      .map(_.file.truth.valid.size.toLong).sum
     // the first pass over the full-size table warms its listing and scan
     // paths and is not timed
     val mixes = (0 to ReadReps).map(k =>
@@ -121,24 +145,29 @@ abstract class IngestWorkload(spark: SparkSession, seed: Long, seconds: Int, wor
 
     tracer.span("restart")(restartCheck(p, audit))
 
-    // earlier repetitions run on copies of the table, the last on the
-    // table; of several, the first warms the compaction path and is not timed
-    val maint = (1 to maintenanceReps).map { k =>
+    // earlier repetitions run on copies of the table, the last on the table
+    val maint = (1 to MaintenanceReps).map { k =>
       val (target, prefix) =
-        if (k == maintenanceReps) (p, "") else (p.copy(work.resolve(s"maint$k")), "copy.")
+        if (k == MaintenanceReps) (p, "") else (p.copy(work.resolve(s"maint$k")), "copy.")
       val t0 = System.nanoTime()
       maintain(target, prefix)
       (System.nanoTime() - t0) / 1e9
     }
-    endToEnd("maintenance_s") = Stats.median(if (maint.size > 1) maint.tail else maint)
+    endToEnd("maintenance_s") = Stats.median(maint.tail)
     samples("maintenance_s") = maint
     val post = tracer.span("read_post")(
       Reads.mix(spark, p, expected, p.bronze.snapshotSeqs.last, expected.total, acct, "read_post"))
 
+    val passes = (1 to QueryReps).map(k => tracer.span("queries")(queries.pass(s"pass#$k")))
+    val perQuery = passes.transpose.map(_.min)
+    endToEnd("queries_s") = perQuery.sum / 1000
+    samples("query_pass_ms") = passes.map(_.sum)
+
     if (tracer.on) {
       val route = (1 to 3).map(_ => tracer.span("parse_route")(parseRoute(p)))
       tracer.drain()
-      layers(rounds, batches, audit, mixes, post, route.size)
+      layers(rounds, batches, source, audit, mixes, post, route.size)
+      queryLayers(queryNames.zip(perQuery).toMap, passes.size)
     }
   }
 
@@ -201,9 +230,32 @@ abstract class IngestWorkload(spark: SparkSession, seed: Long, seconds: Int, wor
     ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / 1048576.0
   }
 
+  /** Per-layer metrics of the query phase: each listed query's best
+    * time (0 for the queries the other workload runs) and the listener's
+    * totals per timed pass. Per-query totals stay in the artifact.
+    */
+  private def queryLayers(ms: Map[String, Double], reps: Int): Unit = {
+    val jobs = tracer.jobs.get.all.filter(_.span.startsWith("q."))
+    QueryList.names.foreach(q => perLayer(s"queries.$q.ms") = ms.getOrElse(q, 0.0))
+    def totals(js: Seq[JobRecord]) = scala.collection.immutable.ListMap(
+      "jobs" -> js.size.toDouble / reps,
+      "stages" -> js.map(_.stages).sum.toDouble / reps,
+      "tasks" -> js.map(_.tasks).sum.toDouble / reps,
+      "cpu_ms" -> js.map(_.cpuNs).sum / 1e6 / reps,
+      "gc_ms" -> js.map(_.gcMs).sum.toDouble / reps,
+      "shuffle_write_bytes" -> js.map(_.shuffleWriteBytes).sum.toDouble / reps,
+      "spill_bytes" -> js.map(_.spillBytes).sum.toDouble / reps,
+      "peak_exec_mem_mb" -> js.map(_.peakExecMem).maxOption.getOrElse(0L) / 1048576.0)
+    totals(jobs).foreach { case (k, v) => perLayer(s"queries.$k") = v }
+    queryTotals = queryNames.map(q => q -> totals(jobs.filter(_.span == s"q.$q")))
+  }
+
+  /** Listener totals per query of the traced run, for the artifact. */
+  var queryTotals: Seq[(String, collection.Map[String, Double])] = Nil
+
   /** Per-layer metrics of the traced run. */
-  private def layers(rounds: Seq[Round], batches: Seq[BatchRecord], audit: Audit,
-      mixes: Seq[Reads.Mix], post: Reads.Mix, routeReps: Int): Unit = {
+  private def layers(rounds: Seq[Round], batches: Seq[BatchRecord], source: SourceLog,
+      audit: Audit, mixes: Seq[Reads.Mix], post: Reads.Mix, routeReps: Int): Unit = {
     val jobs = tracer.jobs.get.all
     def p50(xs: Seq[Double]) = if (xs.isEmpty) 0.0 else Stats.percentile(xs, 50)
     val landed = rounds.flatMap(_.files)
@@ -213,7 +265,7 @@ abstract class IngestWorkload(spark: SparkSession, seed: Long, seconds: Int, wor
     def phase(name: String) = p50(batches.map(_.phase(name).toDouble))
     perLayer("sources.latest_offset_ms_p50") = phase("latestOffset")
     perLayer("sources.get_batch_ms_p50") = phase("getBatch")
-    perLayer("sources.backlog_files_max") = IngestWorkload.backlogMax(landed, audit, batches)
+    perLayer("sources.backlog_files_max") = IngestWorkload.backlogMax(landed, source, batches)
     perLayer("stream.trigger_ms_p50") = phase("triggerExecution")
     perLayer("stream.planning_ms_p50") = phase("queryPlanning")
     perLayer("stream.wal_commit_ms_p50") = phase("walCommit")
@@ -295,13 +347,12 @@ object IngestWorkload {
   }
 
   /** Most files landed but not yet committed, sampled at every
-    * micro-batch end. Counts files with at least one valid row, the ones
-    * whose commit is observable in bronze.
+    * micro-batch end.
     */
-  def backlogMax(landed: Seq[Landed], audit: Audit, batches: Seq[BatchRecord]): Double = {
+  def backlogMax(landed: Seq[Landed], source: SourceLog, batches: Seq[BatchRecord]): Double = {
     val endOf = batches.map(b => b.batchId -> b.endMs).toMap
     val tracked = landed.flatMap(l =>
-      audit.batchOfFile.get(l.file.name).flatMap(endOf.get).map(end => (l.landMs, end)))
+      source.batchOf.get(l.landedName).flatMap(endOf.get).map(end => (l.landMs, end)))
     if (tracked.isEmpty) 0.0
     else batches.map { b =>
       tracked.count { case (land, end) => land <= b.endMs && end > b.endMs }
@@ -315,19 +366,15 @@ object IngestWorkload {
   * cost dominates; row work is tiny.
   */
 final class Trickle(spark: SparkSession, seed: Long, seconds: Int, work: Path,
-    tracer: Tracer, acct: Accounting)
-    extends IngestWorkload(spark, seed, seconds, work, tracer, acct) {
+    tracer: Tracer, acct: Accounting, queryData: QueryData)
+    extends IngestWorkload(spark, seed, seconds, work, tracer, acct, queryData) {
   import Trickle._
 
   private var files = Vector.empty[GenFile]
 
   protected def eventsPerFile: Int = EventsPerFile
   protected def warmFiles: Int = 4
-  /** One maintenance pass over the small trickle table takes under a
-    * second, too short to time once, and the first pass over it still ran
-    * 10-20% slower than the next; catch-up's single pass takes over two.
-    */
-  protected def maintenanceReps: Int = 3
+  protected def queryNames: Seq[String] = QueryList.Trickle
   protected def prepare(dir: Path): Unit =
     files = Inputs.generate(seed, FilesPerSecond * seconds, EventsPerFile, dir, "t")
 
@@ -342,8 +389,9 @@ final class Trickle(spark: SparkSession, seed: Long, seconds: Int, work: Path,
         val due = firstDue + i * 1000L / FilesPerSecond
         val wait = due - System.currentTimeMillis()
         if (wait > 0) Thread.sleep(wait)
-        p.land(files(i), s"${files(i).name}-due$due.json")
-        landed(i) = Landed(files(i), due, System.currentTimeMillis())
+        val name = s"${files(i).name}-due$due.json"
+        p.land(files(i), name)
+        landed(i) = Landed(files(i), name, due, System.currentTimeMillis())
       } catch { case e: Throwable => failure = Some(e) },
       "perfbench-loadgen")
     gen.start()
@@ -354,29 +402,33 @@ final class Trickle(spark: SparkSession, seed: Long, seconds: Int, work: Path,
   }
 
   /** The run measures the offered load only if the generator kept its
-    * schedule and the backlog did not grow from the first half to the
-    * second.
+    * schedule, the backlog did not grow from the first half to the
+    * second, and enough files committed for a p95 freshness.
     */
-  override protected def validate(rounds: Seq[Round], batches: Seq[BatchRecord], audit: Audit): Unit = {
+  override protected def validate(rounds: Seq[Round], batches: Seq[BatchRecord], source: SourceLog): Unit = {
     val landed = rounds.flatMap(_.files)
     val lag = landed.map(l => l.landMs - l.dueMs).max
     if (lag > MaxLagMs) invalid += s"generator fell ${lag} ms behind schedule"
+    val samples = landed.count(_.file.truth.valid.nonEmpty)
+    if (Stats.beyond(samples, 95) < Stats.MinBeyond)
+      invalid += s"only ${Stats.beyond(samples, 95)} freshness samples beyond p95"
     val (first, second) = batches.splitAt(batches.size / 2)
-    val b1 = IngestWorkload.backlogMax(landed, audit, first)
-    val b2 = IngestWorkload.backlogMax(landed, audit, second)
+    val b1 = IngestWorkload.backlogMax(landed, source, first)
+    val b2 = IngestWorkload.backlogMax(landed, source, second)
     if (b2 > 2 * b1 + FilesPerSecond) invalid += s"backlog grew from $b1 to $b2 files"
   }
 }
 
 object Trickle {
-  /** Offered load: 1,600 events/s, well under the pipeline's capacity;
-    * at 15 s it lands 240 files, about 216 with valid rows, enough for a
+  /** Offered load: 2,000 events/s, well under the pipeline's capacity;
+    * at 12 s it lands 240 files, about 216 with valid rows, enough for a
     * p95 with ten samples beyond it. A micro-batch of more than 32 files
     * pays an extra parallel-listing job, which lengthens the batch and so
-    * enlarges the next one: at 24 files/s runs flipped between ~0.9 s and
-    * ~1.6 s batches. At 16 files/s even slow batches stay under 32 files.
+    * enlarges the next one: at 24 files/s, with ~0.9 s batches, runs
+    * flipped between ~0.9 s and ~1.6 s batches. At 20 files/s batches of
+    * ~0.8 s hold about 16 files.
     */
-  val FilesPerSecond = 16
+  val FilesPerSecond = 20
   val EventsPerFile = 100
   val TriggerMs = 100
   /** Delay from query start to the first file's due time. */
@@ -390,18 +442,18 @@ object Trickle {
   * amortised. The table ends with a few large batch directories.
   */
 final class Catchup(spark: SparkSession, seed: Long, seconds: Int, work: Path,
-    tracer: Tracer, acct: Accounting)
-    extends IngestWorkload(spark, seed, seconds, work, tracer, acct) {
+    tracer: Tracer, acct: Accounting, queryData: QueryData)
+    extends IngestWorkload(spark, seed, seconds, work, tracer, acct, queryData) {
   import Catchup._
 
   private var rounds = Vector.empty[Vector[GenFile]]
 
   protected def eventsPerFile: Int = EventsPerFile
-  /** 20,000 rows per set-up pass: with a fifth of the round's files the
-    * timed rounds' rates rose through the run; with these they are flat.
+  /** 10,000 rows per set-up pass. The checked query pass before them
+    * already took the JVM's first-job and JIT cost.
     */
-  protected def warmFiles: Int = 20
-  protected def maintenanceReps: Int = 1
+  protected def warmFiles: Int = 10
+  protected def queryNames: Seq[String] = QueryList.Catchup
   /** One generator per round, all starting on the same day: the backlog
     * is a few days of events from several producers, so compaction
     * merges several batch directories per day.
@@ -418,7 +470,7 @@ final class Catchup(spark: SparkSession, seed: Long, seconds: Int, work: Path,
     val due = System.currentTimeMillis()
     val landed = files.map { f =>
       p.land(f, s"${f.name}.json")
-      Landed(f, due, System.currentTimeMillis())
+      Landed(f, s"${f.name}.json", due, System.currentTimeMillis())
     }
     val startMs = System.currentTimeMillis()
     finish(started(p.start(Trigger.AvailableNow())), "ingest")(_.awaitTermination())
@@ -427,12 +479,11 @@ final class Catchup(spark: SparkSession, seed: Long, seconds: Int, work: Path,
 }
 
 object Catchup {
-  /** Tens of files per micro-batch; 60 of them leave, at the 10% fault
-    * rate, enough files with valid rows over four timed rounds for a p95
-    * with ten samples beyond it.
+  /** Tens of files per micro-batch. Every file of a round commits in the
+    * round's one micro-batch, so freshness here is the round's drain time.
     */
   val FilesPerRound = 60
   val EventsPerFile = 1000
   /** Rounds, sized so the drain lasts about `seconds` on four cores. */
-  def roundsFor(seconds: Int): Int = math.max(4, seconds / 4)
+  def roundsFor(seconds: Int): Int = math.max(3, seconds / 4)
 }
