@@ -20,6 +20,7 @@ import hashlib
 import json
 import os
 import shutil
+import signal
 import subprocess
 import sys
 import time
@@ -136,6 +137,8 @@ def main():
     ap.add_argument("--cpus", type=int, default=default_cpus(),
                     help="Spark local[n] threads (default: nproc - 1, at most 4)")
     a = ap.parse_args()
+    # a terminated run still stops and reaps its build or JVM (run_child)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     if not (1 <= a.seconds <= 60):
         fail("--seconds must be 1..60")
     if not os.path.isfile(os.path.join(PROGRAM, "graft", "engine", "stream", "StreamProcessor.scala")):
